@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from okera_trino_spark.operators._util import r4, t
 from okera_trino_spark.registry import query
@@ -35,7 +36,10 @@ def asof_join_backward(left: DataFrame, right: DataFrame,
     as-of is inclusive) — then last_value(..., ignorenulls) over a
     running window carries each right row's payload forward to every
     later left row. One shuffle (by key), one sort (by time), linear
-    scan; no range pair-join.
+    scan; no range pair-join. The payload travels as ONE struct of the
+    ``carry`` columns — non-null on every right row, null on left rows —
+    so ``last`` picks a whole right row: a NULL payload column on the
+    latest right row is carried as NULL, never torn from an older row.
 
     ``tiebreak`` (r16, guide §2.4): a right-side column whose MAXIMUM
     picks the representative when several right rows share the same
@@ -44,19 +48,15 @@ def asof_join_backward(left: DataFrame, right: DataFrame,
     on the max-tiebreak row — which equals ``max_by(payload,
     tiebreak)`` WITHOUT the pre-aggregation exchange callers otherwise
     need to de-duplicate the right side (the deterministic-representative
-    reduction rides the one shuffle the window already pays). CAVEAT:
-    the equivalence requires non-null carry payloads on the right side
-    — ``last(ignorenulls)`` would skip a max-tiebreak row whose payload
-    is NULL and surface an older row's value where max_by returns NULL
-    (q_asof_join carries TPC-H NOT NULL columns, so it holds there).
-    Left rows carry NULL there and are ordered after right rows by
-    ``_side`` regardless, so left-side order stays don't-care, as
-    before.
+    reduction rides the one shuffle the window already pays). Left rows
+    carry NULL there and are ordered after right rows by ``_side``
+    regardless, so left-side order stays don't-care, as before.
     """
+    payload = T.StructType([right.schema[c] for c in carry])
     lt = left.select(
         F.col(on).alias("_k"), F.col(left_time).alias("_t"),
         F.lit(1).alias("_side"), "*",
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"_c_{c}") for c in carry],
+        F.lit(None).cast(payload).alias("_carry"),
     )
     tb = ([F.col(tiebreak).alias("_tb")] if tiebreak else [])
     tb_null = ([F.lit(None).cast(right.schema[tiebreak].dataType)
@@ -66,7 +66,7 @@ def asof_join_backward(left: DataFrame, right: DataFrame,
         F.col(on).alias("_k"), F.col(right_time).alias("_t"),
         F.lit(0).alias("_side"),
         *[F.lit(None).cast(f.dataType).alias(f.name) for f in left.schema.fields],
-        *[F.col(c).alias(f"_c_{c}") for c in carry],
+        F.struct(*carry).alias("_carry"),
         *tb,
     )
     unioned = lt.unionByName(rt)
@@ -78,13 +78,12 @@ def asof_join_backward(left: DataFrame, right: DataFrame,
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = unioned.select(
-        "*",
-        *[F.last(f"_c_{c}", ignorenulls=True).over(w).alias(f"asof_{c}") for c in carry],
-    )
+        "*", F.last("_carry", ignorenulls=True).over(w).alias("_asof"))
     drop_tb = (["_tb"] if tiebreak else [])
     return (
         carried.filter(F.col("_side") == 1)
-        .drop("_k", "_t", "_side", *drop_tb, *[f"_c_{c}" for c in carry])
+        .select("*", *[F.col("_asof")[c].alias(f"asof_{c}") for c in carry])
+        .drop("_k", "_t", "_side", *drop_tb, "_carry", "_asof")
     )
 
 

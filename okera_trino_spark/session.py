@@ -20,11 +20,6 @@ import socket as _socket
 
 from pyspark.sql import SparkSession
 
-#: Gateway clients already tuned by tune_py4j_gateway (by id — the
-#: client object lives as long as the session's JVM connection).
-_TUNED_GATEWAYS: set[int] = set()
-_PY4J_CLASSES_PATCHED = False
-
 
 def _set_nodelay(sock) -> None:
     try:
@@ -48,11 +43,9 @@ def _patch_py4j_connection_classes() -> None:
     patched (GatewayConnection for the legacy gateway,
     ClientServerConnection for the pinned-thread client PySpark 4
     defaults to); failures fall through silently so a py4j internals
-    change degrades to the unpatched behavior, never an error."""
-    global _PY4J_CLASSES_PATCHED
-    if _PY4J_CLASSES_PATCHED:
-        return
-    _PY4J_CLASSES_PATCHED = True
+    change degrades to the unpatched behavior, never an error. Runs
+    once, when this module is imported (the import lock serialises
+    it); the class markers keep a module reload from wrapping twice."""
     try:
         from py4j.java_gateway import GatewayConnection
 
@@ -86,21 +79,23 @@ def _patch_py4j_connection_classes() -> None:
         pass
 
 
+_patch_py4j_connection_classes()
+
+
 def tune_py4j_gateway(spark: SparkSession) -> None:
     """Set TCP_NODELAY on the session's EXISTING py4j command sockets
     (see _patch_py4j_connection_classes for why) — idempotent and
-    cheap, so callers may invoke it from hot paths behind the
-    module-level guard. Covers sessions created before this package
-    was imported (the external driver builds its own SparkSession and
-    only then imports the entry module)."""
-    _patch_py4j_connection_classes()
+    cheap, so callers may invoke it from hot paths: a tuned gateway
+    client carries a marker attribute. Covers sessions created before
+    this package was imported (the external driver builds its own
+    SparkSession and only then imports the entry module)."""
     try:
         client = spark._sc._gateway._gateway_client
     except AttributeError:  # pragma: no cover - connect-style session
         return
-    if id(client) in _TUNED_GATEWAYS:
+    if getattr(client, "_okera_nodelay", False):
         return
-    _TUNED_GATEWAYS.add(id(client))
+    client._okera_nodelay = True
     for conn in list(getattr(client, "deque", [])):
         _set_nodelay(getattr(conn, "socket", None))
 

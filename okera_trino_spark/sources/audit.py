@@ -15,11 +15,16 @@ Spark invokes it after every successful/failed DataFrame action
 
 Listener callbacks are delivered asynchronously from the listener bus —
 consumers (tests) poll briefly rather than assuming synchronous append.
+
+A session made by ``newSession()`` does not share its parent's
+listeners, so ``GovernedCatalog`` installs one per principal session,
+attributed to that principal and appending to the parent's log.
 """
 
 from __future__ import annotations
 
 import atexit
+import itertools
 import time
 from dataclasses import dataclass
 from weakref import WeakKeyDictionary
@@ -48,6 +53,9 @@ _SESSION_LOGS: WeakKeyDictionary = WeakKeyDictionary()
 #: callback object alive for exactly that lifetime.
 _LISTENERS: WeakKeyDictionary = WeakKeyDictionary()
 _ATEXIT_INSTALLED = False
+#: Execution record ids, unique across every listener (several append
+#: to one log).
+_EXECUTION_IDS = itertools.count()
 
 
 def set_audit_user(spark: SparkSession, user: str) -> None:
@@ -69,10 +77,9 @@ class _QueryExecutionListener:
     class Java:  # noqa: D106 — py4j protocol marker
         implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
 
-    def __init__(self, records: list[ExecutionRecord]) -> None:
+    def __init__(self, records: list[ExecutionRecord], user: str) -> None:
         self._records = records
-        self._user = "root"
-        self._next_id = 0
+        self._user = user
 
     def _plan_summary(self, qe) -> str:
         # simpleString(25) renders ONE line for the root node — the same
@@ -88,18 +95,14 @@ class _QueryExecutionListener:
             return "<unavailable>"
 
     def onSuccess(self, funcName, qe, durationNs) -> None:
-        qid = self._next_id
-        self._next_id += 1
         elapsed = durationNs / 1e6
         self._records.append(ExecutionRecord(
-            query_id=qid, user=self._user, action=str(funcName),
-            plan=self._plan_summary(qe),
+            query_id=next(_EXECUTION_IDS), user=self._user,
+            action=str(funcName), plan=self._plan_summary(qe),
             start_time=time.time() - elapsed / 1000.0,
             elapsed_ms=elapsed, success=True))
 
     def onFailure(self, funcName, qe, exception) -> None:
-        qid = self._next_id
-        self._next_id += 1
         try:
             msg = str(exception.getMessage())
         except Exception:  # noqa: BLE001
@@ -107,14 +110,17 @@ class _QueryExecutionListener:
         # Don't touch qe's plans here: a query that failed ANALYSIS has no
         # optimized plan, and asking for one logs a JVM error per event.
         self._records.append(ExecutionRecord(
-            query_id=qid, user=self._user, action=str(funcName),
-            plan="<failed>",
+            query_id=next(_EXECUTION_IDS), user=self._user,
+            action=str(funcName), plan="<failed>",
             start_time=time.time(), elapsed_ms=0.0,
             success=False, error=msg[:500]))
 
 
-def install_audit_listener(spark: SparkSession) -> bool:
-    """Register the engine-level listener on this session (idempotent).
+def install_audit_listener(spark: SparkSession, user: str = "root",
+                           log_of: SparkSession | None = None) -> bool:
+    """Register the engine-level listener on this session (idempotent),
+    attributing its executions to ``user`` and appending them to the
+    execution log of ``log_of`` (default: this session's own).
 
     Returns True if the listener is installed. Requires the py4j callback
     server (same mechanism PySpark's StreamingQueryListener uses); if the
@@ -128,8 +134,9 @@ def install_audit_listener(spark: SparkSession) -> bool:
         from pyspark.java_gateway import ensure_callback_server_started
         gw = spark.sparkContext._gateway
         ensure_callback_server_started(gw)
-        records: list[ExecutionRecord] = []
-        listener = _QueryExecutionListener(records)
+        records = _SESSION_LOGS.setdefault(
+            spark if log_of is None else log_of, [])
+        listener = _QueryExecutionListener(records, user)
         spark._jsparkSession.listenerManager().register(listener)
         _SESSION_LOGS[spark] = records
         _LISTENERS[spark] = listener

@@ -25,6 +25,15 @@ Scan execution itself is Spark's DataSource V2 parquet reader — vectorized
 columnar decode, split planning, locality, predicate/projection/limit
 pushdown are all Catalyst-native (the reference hand-rolls these in
 RecordServicePageSource.java / RecordServiceSplitManagerImpl.java).
+
+Session model: a catalog keeps one Spark session per principal
+(``spark.newSession()``). All of them share the SparkContext, the
+executors and the cache; each has its own temp views, so the SQL path
+of one principal resolves table names to that principal's governed
+reads and to nothing else — no other principal's views and no raw temp
+views of the caller's session. The caller's session only supplies the
+runtime confs and table schemas the principal sessions start from.
+``login`` still sets one catalog-wide identity (``props.user``).
 """
 
 from __future__ import annotations
@@ -32,6 +41,7 @@ from __future__ import annotations
 import itertools
 import os
 import re
+import threading
 import time
 from dataclasses import dataclass, field
 from typing import Callable
@@ -68,7 +78,8 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: Analyzed-plan memo: session → {(sf_dir, table) → DataFrame}. A
+#: Analyzed-plan memo: session → {(sf_dir, table) → (DataFrame, parquet
+#: file schema)}. A
 #: DataFrame is an immutable logical plan, so reuse is safe; this is the
 #: Spark-side analogue of the reference's per-query metadata snapshot
 #: cache (RecordServiceMetadata.java:102-107, BoundedCache size 512) —
@@ -81,8 +92,14 @@ def table_path(sf_dir: str, name: str) -> str:
 _TABLE_MEMO: WeakKeyDictionary = WeakKeyDictionary()
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str,
+               schema_from: SparkSession | None = None) -> DataFrame:
     """Plain governed-free scan. Catalyst owns splits + pushdown.
+
+    ``schema_from`` names a session whose load of the same file supplies
+    the parquet schema, so this load skips the footer read (at sf0.01
+    on a 4-vCPU host, a cold 10-table load into a principal session
+    took 0.85-1.2 s inferring schemas, 0.13-0.21 s with them given).
 
     ``events.ts`` has shipped in two fixture shapes and the loader must
     accept both — the fixture generator is not under this repo's
@@ -108,25 +125,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     per_session = _TABLE_MEMO.setdefault(spark, {})
     memo = per_session.get((sf_dir, name))
     if memo is not None:
-        return memo
+        return memo[0]
+    reader = spark.read
+    file_schema = None
+    if schema_from is not None:
+        load_table(schema_from, sf_dir, name)
+        file_schema = _TABLE_MEMO[schema_from][(sf_dir, name)][1]
+        reader = reader.schema(file_schema)
     if name == "events":
         # nanosAsLong is an engine default (session._BUILD_CONFS); set it
         # here too — runtime-settable — so externally built sessions (the
         # driver supplies its own) read events identically. Harmless for
         # micros fixtures: the conf only affects TIMESTAMP(NANOS) columns.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            df = df.withColumn(
-                "ts",
-                F.expr("timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
-            )
-        # TimestampType/TimestampNTZType: handled by the normalize pass.
-    else:
-        df = spark.read.parquet(table_path(sf_dir, name))
+    df = reader.parquet(table_path(sf_dir, name))
+    if file_schema is None:
+        file_schema = df.schema
+    if name == "events" and isinstance(file_schema["ts"].dataType,
+                                       T.LongType):
+        df = df.withColumn(
+            "ts",
+            F.expr("timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
+        )
+    # TimestampType/TimestampNTZType: handled by the normalize pass.
     df = _normalize_timestamps(df)
-    per_session[(sf_dir, name)] = df
+    per_session[(sf_dir, name)] = (df, file_schema)
     return df
 
 
@@ -147,24 +170,6 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Bumped on every raw (ungoverned) temp-view registration; part of the
-#: GovernedCatalog._register_governed memo key so interleaved raw
-#: registrations can never be mistaken for current governed views.
-_RAW_REGISTRATIONS = 0
-
-#: SESSION-GLOBAL governed-view registration stamp: session → (catalog
-#: serial, user, policy epoch, raw registrations) of the views currently
-#: registered on that session's temp-view namespace. Temp views are
-#: session state, so the stamp must live with the session, not the
-#: catalog instance — with an instance-local memo, catalog B could skip
-#: re-registration while catalog A's governed views (different
-#: user/policies) are what's actually registered, silently running B's
-#: SQL under A's governance. Serials are monotonic (never reused after
-#: GC, unlike id()).
-_GOVERNED_STAMP: WeakKeyDictionary = WeakKeyDictionary()
-_CATALOG_SERIAL = itertools.count()
-
-
 def register_tables(spark: SparkSession, sf_dir: str,
                     names: list[str] | None = None) -> dict[str, DataFrame]:
     """Register fixture tables as temp views (idempotent) and return them.
@@ -173,14 +178,31 @@ def register_tables(spark: SparkSession, sf_dir: str,
     where SQL is the clearer declaration; Catalyst compiles both API
     styles to the same plans.
     """
-    global _RAW_REGISTRATIONS
-    _RAW_REGISTRATIONS += 1
     out: dict[str, DataFrame] = {}
     for name in names or TABLE_NAMES:
         df = load_table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def _principal_session(root: SparkSession, user: str) -> SparkSession:
+    """A new session on ``root``'s SparkContext for one principal.
+
+    A child session starts from the SparkConf, not from confs set on
+    ``root`` at runtime (``spark.sql.ansi.enabled=false`` on the parent
+    reads ``true`` in the child), so those are copied. Nor does it
+    share ``root``'s QueryExecutionListener, so it gets its own,
+    attributed to ``user`` and appending to ``root``'s execution log."""
+    from okera_trino_spark.sources.audit import install_audit_listener
+
+    child = root.newSession()
+    child_confs = child.conf.getAll
+    for key, value in root.conf.getAll.items():
+        if child_confs.get(key) != value:
+            child.conf.set(key, value)
+    install_audit_listener(child, user=user, log_of=root)
+    return child
 
 
 #: (sf_dir, name) -> uncompressed data bytes; fixture files are immutable,
@@ -283,6 +305,15 @@ class GovernedCatalog:
     (RecordServicePlugin.java:61-67) map to ``sample_bytes`` presets:
     ``GovernedCatalog(...)`` = ``okera``, ``sample_bytes=10MB/100MB`` =
     the ``okera_sampled_*`` variants.
+
+    One Spark session per principal: the first statement or read of a
+    principal creates it (under a lock) from ``spark``; every session
+    shares the SparkContext and the cache. Governed SQL runs on the
+    principal's session and resolves only the names this catalog
+    registered there — the principal's governed tables, registered once
+    and again only after an input of :meth:`read` changes (``set_policy``
+    for that principal, SET/RESET SESSION of ``limit`` or the sampling
+    cap). ``login`` still sets one catalog-wide identity.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str,
@@ -308,15 +339,12 @@ class GovernedCatalog:
         #: prepared-statement surface); EXECUTE binds ? params.
         self._prepared: dict[str, str] = {}
         self._audit: list[AuditRecord] = []
-        self._next_query_id = 0
+        self._query_ids = itertools.count()
         self._delegations: dict[str, set[str]] = {}  # delegate -> allowed targets
-        #: governed temp-view registration memo: this catalog's identity
-        #: in the session-global _GOVERNED_STAMP — back-to-back queries
-        #: by the same user through the same catalog skip the 10-table
-        #: re-registration; any other catalog instance touching the
-        #: session invalidates the skip (see _GOVERNED_STAMP).
-        self._policy_epoch = 0
-        self._serial = next(_CATALOG_SERIAL)
+        self._lock = threading.RLock()  # guards the two fields below
+        self._sessions: dict[str, SparkSession] = {}  # principal -> session
+        #: principals whose session holds current governed temp views
+        self._registered: set[str] = set()
         self._cached: dict[tuple[str, str], DataFrame] = {}  # (user, name) -> pinned governed plan
         #: per-user metadata/stats cache with TTL; 0 disables caching —
         #: the reference's default (RecordServiceMetadata.java:97-107,
@@ -380,7 +408,8 @@ class GovernedCatalog:
     # ------------------------------------------------------------- policies
     def set_policy(self, user: str, table: str, policy: TablePolicy) -> None:
         self._policies.setdefault(user, {})[table] = policy
-        self._policy_epoch += 1  # invalidate registered governed views
+        with self._lock:
+            self._registered.discard(user)
         self.uncache_table(table)  # a pinned pre-policy slice must not survive
 
     def _effective_user(self, user: str | None, on_behalf_of: str | None) -> str:
@@ -442,7 +471,8 @@ class GovernedCatalog:
             df = self.expand_view(name, user=user)
         else:
             _, name = self.resolve(name)
-            df = load_table(self.spark, self.sf_dir, name)
+            df = load_table(self._session(user), self.sf_dir, name,
+                            schema_from=self.spark)
         policy = self._policies.get(user, {}).get(name)
         if policy is not None:
             if policy.row_filter:
@@ -533,33 +563,37 @@ class GovernedCatalog:
             raise ValueError(f"no such view: {name}")
         del self._views[name]
 
-    def _register_governed(self, user: str) -> None:
-        """Register every table as a temp view of its GOVERNED DataFrame
-        for ``user`` — the SQL path then sees exactly what the policy
-        allows (column prune + row filter + sampling + limit), matching
-        the reference's server-side enforcement on every read
-        (RecordServiceMetadata.java:109-118 internal views, :804 column
-        authz). Temp views are session-global state; each call stamps the
-        current user's governance, mirroring one-query-one-identity.
-        Re-registration is skipped only when THIS catalog's views for the
-        same user are what the session currently holds — the stamp is
-        session-global (_GOVERNED_STAMP), so another catalog instance (or
-        a raw register_tables call) invalidates the skip and the next
-        execute re-registers under the correct governance."""
-        key = (self._serial, user, self._policy_epoch, _RAW_REGISTRATIONS)
-        if _GOVERNED_STAMP.get(self.spark) == key:
-            return
-        for schema in SCHEMAS.values():
-            for name in schema:
-                self.read(name, user=user).createOrReplaceTempView(name)
-        _GOVERNED_STAMP[self.spark] = key
+    def _session(self, user: str) -> SparkSession:
+        """The principal's own session, created on first use."""
+        with self._lock:
+            spark = self._sessions.get(user)
+            if spark is None:
+                spark = self._sessions[user] = _principal_session(
+                    self.spark, user)
+            return spark
+
+    def _governed_session(self, user: str) -> SparkSession:
+        """The principal's session with every table registered as a temp
+        view of its GOVERNED read for ``user`` — the SQL path then sees
+        exactly what the policy allows (column prune + row filter +
+        sampling + limit), matching the reference's server-side
+        enforcement on every read (RecordServiceMetadata.java:109-118
+        internal views, :804 column authz)."""
+        with self._lock:
+            spark = self._session(user)
+            if user not in self._registered:
+                for schema in SCHEMAS.values():
+                    for name in schema:
+                        self.read(name, user=user).createOrReplaceTempView(name)
+                self._registered.add(user)
+            return spark
 
     def expand_view(self, name: str, user: str | None = None) -> DataFrame:
         """Expand stored view SQL against the GOVERNED tables
         (read path: RecordServiceMetadata.java:392-444) — view expansion
         must not bypass the expanding user's policies."""
-        self._register_governed(user or self.props.user)
-        return self.spark.sql(self._views[name])
+        return self._governed_session(user or self.props.user).sql(
+            self._views[name])
 
     #: SET SESSION name → SessionProperties field + value parser. The
     #: names are the reference's session properties
@@ -575,15 +609,18 @@ class GovernedCatalog:
         r"^\s*(SET|RESET)\s+SESSION\s+([\w.]+)(?:\s*=\s*(.+?))?\s*$",
         re.IGNORECASE | re.DOTALL)
 
-    def _handle_set_session(self, sql: str) -> DataFrame | None:
+    def _handle_set_session(self, sql: str, user: str) -> DataFrame | None:
         """Trino's SET SESSION / RESET SESSION statements mutate the
         catalog's SessionProperties (C21) instead of reaching the
         planner. Returns the confirmation DataFrame, or None when the
-        statement is not a session-property one."""
+        statement is not a session-property one. ``limit`` and the
+        sampling cap are inputs of every governed read, so changing
+        them drops every principal's registered governed views."""
+        spark = self._session(user)
         if re.fullmatch(r"\s*SHOW\s+SESSION\s*", sql, re.IGNORECASE):
             rows = [(n, str(getattr(self.props, f)))
                     for n, (f, _) in sorted(self._SESSION_PROPS.items())]
-            return self.spark.createDataFrame(rows, "property string, value string")
+            return spark.createDataFrame(rows, "property string, value string")
         m = self._SET_SESSION_RE.match(sql)
         if not m:
             return None
@@ -600,7 +637,10 @@ class GovernedCatalog:
             raw = raw.strip()
             value = conv(raw[1:-1] if raw[:1] == "'" else raw)
         setattr(self.props, field, value)
-        return self.spark.sql(
+        if field in ("limit", "sampling_bytes"):
+            with self._lock:
+                self._registered.clear()
+        return spark.sql(
             "SELECT ? AS property, ? AS value", args=[name, str(value)])
 
     # ------------------------------------------------- metadata statements
@@ -644,6 +684,7 @@ class GovernedCatalog:
         parameterized sql (values never enter the SQL text — no escaping
         surface), ``DEALLOCATE PREPARE q`` drops it. USING values are
         literals: numbers, strings ('' escapes), booleans, NULL."""
+        spark = self._session(user)
         m = self._PREPARE_RE.match(sql)
         if m:
             body = m.group(2).strip()
@@ -655,12 +696,12 @@ class GovernedCatalog:
                     "PREPARE body cannot be another prepared-statement "
                     "command")
             self._prepared[m.group(1).lower()] = body
-            return self.spark.sql("SELECT ? AS prepared", args=[m.group(1)])
+            return spark.sql("SELECT ? AS prepared", args=[m.group(1)])
         m = self._DEALLOCATE_RE.match(sql)
         if m:
             if self._prepared.pop(m.group(1).lower(), None) is None:
                 raise KeyError(f"no such prepared statement: {m.group(1)}")
-            return self.spark.sql("SELECT ? AS deallocated", args=[m.group(1)])
+            return spark.sql("SELECT ? AS deallocated", args=[m.group(1)])
         m = re.match(r"^\s*DESCRIBE\s+(INPUT|OUTPUT)\s+(\w+)\s*$",
                      sql, re.IGNORECASE)
         if m:
@@ -678,7 +719,7 @@ class GovernedCatalog:
                 # Trino reports each ? marker's position; parameter
                 # types are unknown until EXECUTE binds values (Trino
                 # itself shows "unknown" for untyped markers).
-                return self.spark.createDataFrame(
+                return spark.createDataFrame(
                     [(i, "unknown") for i in range(n_params)],
                     "position int, type string")
             # OUTPUT: the planned schema WITHOUT executing — plan with
@@ -693,7 +734,7 @@ class GovernedCatalog:
                                if n_params else None)
             rows = [(f.name, spark_type_to_trino(f.dataType))
                     for f in out.schema.fields]
-            return self.spark.createDataFrame(
+            return spark.createDataFrame(
                 rows, "column_name string, type string")
         m = self._EXECUTE_RE.match(sql)
         if m:
@@ -747,6 +788,7 @@ class GovernedCatalog:
         ``col_name, data_type, comment``) so existing clients parse them
         unchanged. Returns None when ``sql`` is not a metadata
         statement."""
+        spark = self._session(user)
         m = self._SHOW_CATALOGS_RE.match(sql)
         if m:
             # The three connector flavors the reference plugin registers
@@ -755,11 +797,11 @@ class GovernedCatalog:
             cats = sorted({self.catalog_name, "okera",
                            "okera_sampled_10mb", "okera_sampled_100mb"})
             rows = [(c,) for c in self._like(m.group(1), cats)]
-            return self.spark.createDataFrame(rows, "catalog string")
+            return spark.createDataFrame(rows, "catalog string")
         m = self._SHOW_SCHEMAS_RE.match(sql)
         if m:
             rows = [(s,) for s in self._like(m.group(1), self.list_schemas())]
-            return self.spark.createDataFrame(rows, "namespace string")
+            return spark.createDataFrame(rows, "namespace string")
         m = self._SHOW_TABLES_RE.match(sql)
         if m:
             schema = m.group(1).strip('`"').lower() if m.group(1) else None
@@ -769,7 +811,7 @@ class GovernedCatalog:
                 names = [tuple(q.split(".", 1)) for q in self.list_tables()]
             keep = set(self._like(m.group(2), [t for _, t in names]))
             rows = [(s, t) for s, t in names if t in keep]
-            return self.spark.createDataFrame(
+            return spark.createDataFrame(
                 rows, "namespace string, tableName string")
         m = re.match(r"^\s*USE\s+([\w`\"]+)\s*$", sql, re.IGNORECASE)
         if m:
@@ -777,7 +819,7 @@ class GovernedCatalog:
             if schema in HIDDEN_SCHEMAS or schema not in SCHEMAS:
                 raise KeyError(f"no such schema: {schema}")
             self._current_schema = schema
-            return self.spark.sql("SELECT ? AS current_schema", args=[schema])
+            return spark.sql("SELECT ? AS current_schema", args=[schema])
         m = re.match(r"^\s*SHOW\s+FUNCTIONS(?:\s+LIKE\s+'([^']*)')?\s*$",
                      sql, re.IGNORECASE)
         if m:
@@ -788,10 +830,10 @@ class GovernedCatalog:
             # dialect UDFs. One name per row, sorted — the subset of
             # Trino's six-column shape every client actually reads.
             names = sorted({f.name for f in
-                            self.spark.catalog.listFunctions()}
+                            spark.catalog.listFunctions()}
                            | {"trino_normalize"})
             rows = [(n,) for n in self._like(m.group(1), names)]
-            return self.spark.createDataFrame(rows, "function string")
+            return spark.createDataFrame(rows, "function string")
         m = re.match(r"^\s*SHOW\s+CREATE\s+VIEW\s+([\w.`\"]+)\s*$",
                      sql, re.IGNORECASE)
         if m:
@@ -799,7 +841,7 @@ class GovernedCatalog:
             text = self._views.get(name)
             if text is None:
                 raise KeyError(f"no such view: {name}")
-            return self.spark.sql(
+            return spark.sql(
                 "SELECT ? AS view, ? AS create_sql",
                 args=[name, f"CREATE VIEW {name} AS {text}"])
         m = self._DESCRIBE_RE.match(sql)
@@ -808,7 +850,7 @@ class GovernedCatalog:
             self.resolve(name)  # KeyError on unknown tables, like read()
             rows = [(f.name, f.dataType.simpleString(), None)
                     for f in self.table_schema(name, user=user).fields]
-            return self.spark.createDataFrame(
+            return spark.createDataFrame(
                 rows, "col_name string, data_type string, comment string")
         m = re.match(r"^\s*SHOW\s+STATS\s+FOR\s+([\w.`\"]+)\s*$",
                      sql, re.IGNORECASE)
@@ -830,7 +872,7 @@ class GovernedCatalog:
                 rows.append((col, ds, nf, None))
             rows.append((None, None, None,
                          None if rc is None else float(rc)))
-            return self.spark.createDataFrame(
+            return spark.createDataFrame(
                 rows, "column_name string, data_size double, "
                       "nulls_fraction double, row_count double")
         return None
@@ -847,7 +889,7 @@ class GovernedCatalog:
         r"\binformation_schema\s*\.\s*(schemata|tables|columns|views)\b",
         re.IGNORECASE)
 
-    def _rewrite_information_schema(self, sql: str,
+    def _rewrite_information_schema(self, spark: SparkSession, sql: str,
                                     user: str) -> str | None:
         """When ``sql`` references information_schema views, register
         policy-scoped temp views backing them and return the statement
@@ -874,7 +916,7 @@ class GovernedCatalog:
         cat = self.catalog_name
         if "schemata" in wanted:
             rows = [(cat, s) for s in self.list_schemas()]
-            self.spark.createDataFrame(
+            spark.createDataFrame(
                 rows, "catalog_name string, schema_name string"
             ).createOrReplaceTempView("_info_schema_schemata")
         if "tables" in wanted:
@@ -883,7 +925,7 @@ class GovernedCatalog:
                     for t in self.list_tables(s)]
             rows += [(cat, "default", v, "VIEW")
                      for v in self.list_views()]
-            self.spark.createDataFrame(
+            spark.createDataFrame(
                 rows, "table_catalog string, table_schema string, "
                       "table_name string, table_type string"
             ).createOrReplaceTempView("_info_schema_tables")
@@ -896,7 +938,7 @@ class GovernedCatalog:
                               "YES" if f.nullable else "NO",
                               spark_type_to_trino(f.dataType))
                              for i, f in enumerate(fields)]
-            self.spark.createDataFrame(
+            spark.createDataFrame(
                 rows, "table_catalog string, table_schema string, "
                       "table_name string, column_name string, "
                       "ordinal_position int, column_default string, "
@@ -905,7 +947,7 @@ class GovernedCatalog:
         if "views" in wanted:
             rows = [(cat, "default", v, self._views[v])
                     for v in self.list_views()]
-            self.spark.createDataFrame(
+            spark.createDataFrame(
                 rows, "table_catalog string, table_schema string, "
                       "table_name string, view_definition string"
             ).createOrReplaceTempView("_info_schema_views")
@@ -942,104 +984,70 @@ class GovernedCatalog:
         DESCRIBE — see :meth:`_handle_metadata`) and session-property
         statements (SET/RESET/SHOW SESSION) are answered from the
         governed registry on BOTH dialects, before any planner text
-        reaches Spark."""
-        qid = self._next_query_id
-        self._next_query_id += 1
-        start = time.time()
+        reaches Spark.
+
+        Exactly one audit record per call, appended when the call ends;
+        a denied delegation is recorded under the pre-delegation user."""
+        rec = AuditRecord(query_id=next(self._query_ids),
+                          user=user or self.props.user, sql=sql,
+                          start_time=time.time(), elapsed_ms=0.0,
+                          success=False)
         try:
-            user = self._effective_user(user, on_behalf_of)
-        except PermissionError as exc:
-            self._audit.append(AuditRecord(
-                query_id=qid, user=user or self.props.user, sql=sql,
-                start_time=start, elapsed_ms=0.0,
-                success=False, error=str(exc)))
-            raise
-        try:
-            handled = self._handle_set_session(sql)
-            if handled is not None:
-                self._audit.append(AuditRecord(
-                    query_id=qid, user=user, sql=sql,
-                    start_time=start,
-                    elapsed_ms=(time.time() - start) * 1000.0,
-                    success=True))
-                return handled
-        except ValueError:
-            self._audit.append(AuditRecord(
-                query_id=qid, user=user, sql=sql,
-                start_time=start, elapsed_ms=(time.time() - start) * 1000.0,
-                success=False, error="invalid session property"))
-            raise
-        try:
-            handled = self._handle_prepared(sql, user, dialect)
-            if handled is None:
-                handled = self._handle_metadata(sql, user)
-            if handled is not None:
-                self._audit.append(AuditRecord(
-                    query_id=qid, user=user, sql=sql,
-                    start_time=start,
-                    elapsed_ms=(time.time() - start) * 1000.0,
-                    success=True))
-                return handled
-        except (KeyError, ValueError) as exc:
-            self._audit.append(AuditRecord(
-                query_id=qid, user=user, sql=sql,
-                start_time=start, elapsed_ms=(time.time() - start) * 1000.0,
-                success=False, error=str(exc)))
-            raise
-        self._register_governed(user)
-        try:
-            # information_schema SELECTs (both dialects): swap the
-            # references onto policy-scoped registry views; the audit
-            # below records the ORIGINAL text.
-            info = self._rewrite_information_schema(sql, user)
-            plan_sql = info if info is not None else sql
-            if dialect == "trino":
-                from okera_trino_spark.functions.trino_sql import (
-                    ensure_dialect_udfs, execute_match_recognize,
-                    execute_trino_explain, rewrite_trino_sql)
-                ensure_dialect_udfs(self.spark, sql)
-                # EXPLAIN family over the GOVERNED views registered
-                # above — plan output is policy-scoped like the query
-                # itself (VALIDATE on a hidden column fails analysis).
-                ex = execute_trino_explain(self.spark, plan_sql, None,
-                                           params)
-                if ex is not None:
-                    self._audit.append(AuditRecord(
-                        query_id=qid, user=user, sql=sql,
-                        start_time=start,
-                        elapsed_ms=(time.time() - start) * 1000.0,
-                        success=True))
-                    return ex
-                if re.search(r"\bMATCH_RECOGNIZE\b", sql, re.IGNORECASE):
-                    # Lowered onto the match_recognize operator over the
-                    # GOVERNED temp views registered above — policies
-                    # apply to the pattern scan like any other read.
-                    mr = execute_match_recognize(self.spark, sql, params)
-                    if mr is not None:
-                        self._audit.append(AuditRecord(
-                            query_id=qid, user=user, sql=sql,
-                            start_time=start,
-                            elapsed_ms=(time.time() - start) * 1000.0,
-                            success=True))
-                        return mr
-                text = rewrite_trino_sql(plan_sql)
-            elif dialect == "spark":
-                text = plan_sql
-            else:
-                raise ValueError(f"dialect must be spark|trino, got {dialect!r}")
-            df = (self.spark.sql(text, args=params) if params is not None
-                  else self.spark.sql(text))
-            self._audit.append(AuditRecord(
-                query_id=qid, user=user, sql=sql,
-                start_time=start, elapsed_ms=(time.time() - start) * 1000.0,
-                success=True))
+            rec.user = user = self._effective_user(user, on_behalf_of)
+            try:
+                df = self._handle_set_session(sql, user)
+            except ValueError:
+                rec.error = "invalid session property"
+                raise
+            if df is None:
+                df = self._handle_prepared(sql, user, dialect)
+            if df is None:
+                df = self._handle_metadata(sql, user)
+            if df is None:
+                df = self._execute_sql(sql, user, dialect, params)
+            rec.success = True
             return df
-        except Exception as exc:  # noqa: BLE001 — audit then re-raise
-            self._audit.append(AuditRecord(
-                query_id=qid, user=user, sql=sql,
-                start_time=start, elapsed_ms=(time.time() - start) * 1000.0,
-                success=False, error=str(exc)))
+        except Exception as exc:
+            rec.error = rec.error or str(exc)
             raise
+        finally:
+            rec.elapsed_ms = (time.time() - rec.start_time) * 1000.0
+            self._audit.append(rec)
+
+    def _execute_sql(self, sql: str, user: str, dialect: str,
+                     params: list | None) -> DataFrame:
+        """Plan ``sql`` on the principal's governed session."""
+        spark = self._governed_session(user)
+        # information_schema SELECTs (both dialects): swap the
+        # references onto policy-scoped registry views; the audit
+        # records the ORIGINAL text.
+        info = self._rewrite_information_schema(spark, sql, user)
+        plan_sql = info if info is not None else sql
+        if dialect == "trino":
+            from okera_trino_spark.functions.trino_sql import (
+                ensure_dialect_udfs, execute_match_recognize,
+                execute_trino_explain, rewrite_trino_sql)
+            ensure_dialect_udfs(spark, sql)
+            # EXPLAIN family over the governed views — plan output is
+            # policy-scoped like the query itself (VALIDATE on a hidden
+            # column fails analysis).
+            ex = execute_trino_explain(spark, plan_sql, None, params)
+            if ex is not None:
+                return ex
+            if re.search(r"\bMATCH_RECOGNIZE\b", sql, re.IGNORECASE):
+                # Lowered onto the match_recognize operator over the
+                # governed views — policies apply to the pattern scan
+                # like any other read.
+                mr = execute_match_recognize(spark, sql, params)
+                if mr is not None:
+                    return mr
+            text = rewrite_trino_sql(plan_sql)
+        elif dialect == "spark":
+            text = plan_sql
+        else:
+            raise ValueError(f"dialect must be spark|trino, got {dialect!r}")
+        return (spark.sql(text, args=params) if params is not None
+                else spark.sql(text))
 
     @property
     def audit_log(self) -> list[AuditRecord]:

@@ -82,3 +82,19 @@ def test_asof_tiebreak_matches_prereduced(spark, left, right):
         key=lambda r: (r[0], r[1], r[2] is None, r[2]),
     )
     assert got == _brute_force(left, right_r)
+
+
+def test_asof_null_payload_carried_whole(spark):
+    """A NULL payload column on the chosen right row is carried as NULL
+    (``max_by`` semantics), never filled from an older right row; with
+    two carry columns the carried row stays whole."""
+    ldf = spark.createDataFrame([(0, 2), (1, 5)], "k long, t long")
+    rdf = spark.createDataFrame(
+        [(0, 1, 1, 10, "a"), (0, 1, 2, None, "b"),   # tie at t=1: max tb=2
+         (1, 1, 1, 20, "c"), (1, 3, 1, None, "d")],  # latest at t=3
+        "k long, t long, tb long, v long, w string")
+    got = sorted(
+        (r.k, r.asof_v, r.asof_w) for r in
+        asof_join_backward(ldf, rdf, on="k", left_time="t", right_time="t",
+                           carry=["v", "w"], tiebreak="tb").collect())
+    assert got == [(0, None, "b"), (1, None, "d")]

@@ -196,6 +196,67 @@ def test_governed_stamp_is_session_global(spark, sf_dir):
     assert again == full
 
 
+def test_concurrent_principals_stay_governed(spark, sf_dir):
+    """Four principals (row filter, column mask, column allowlist, no
+    policy) share one catalog from four threads: every statement returns
+    that principal's single-threaded answer — no principal's statement
+    resolves another's governed views — and audit query ids stay
+    unique."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    cat = GovernedCatalog(spark, sf_dir)
+    cat.set_policy("tg_rows", "customer",
+                   TablePolicy(row_filter="c_nationkey < 15"))
+    cat.set_policy("tg_mask", "customer",
+                   TablePolicy(column_masks={"c_name": "hash"}))
+    cat.set_policy("tg_cols", "customer", TablePolicy(
+        allowed_columns=["c_custkey", "c_name", "c_nationkey"]))
+    principals = ["tg_rows", "tg_mask", "tg_cols", "tg_open"]
+    statements = [
+        "SELECT count(*) AS n FROM customer",
+        "SELECT c_custkey, c_name FROM customer WHERE c_custkey <= 20",
+        "SELECT count(*) AS n FROM information_schema.columns",
+    ]
+
+    def run(user: str, sql: str) -> tuple:
+        return tuple(sorted(tuple(r) for r in
+                            cat.execute(sql, user=user).collect()))
+
+    expected = {(u, q): run(u, q) for u in principals for q in statements}
+    # each statement tells some principals apart
+    assert [len({expected[(u, q)] for u in principals})
+            for q in statements] == [2, 3, 2]
+
+    def client(j: int) -> list[tuple[str, str, bool]]:
+        out = []
+        for k in range(15):
+            user, sql = principals[(j + k) % 4], statements[(j + k // 4) % 3]
+            out.append((user, sql, run(user, sql) == expected[(user, sql)]))
+        return out
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        results = [r for rs in pool.map(client, range(4)) for r in rs]
+    wrong = [(u, q) for u, q, ok in results if not ok]
+    assert len(results) == 60 and not wrong, wrong
+    ids = [r.query_id for r in cat.audit_log]
+    assert len(ids) == len(set(ids)) == 72
+
+
+def test_execute_cannot_resolve_raw_temp_views(spark, sf_dir):
+    """Governed SQL resolves only the names the catalog registered: a
+    raw temp view on the caller's session is not one of them."""
+    from pyspark.errors import AnalysisException
+
+    spark.range(3).createOrReplaceTempView("raw_only_view")
+    try:
+        assert spark.sql("SELECT * FROM raw_only_view").count() == 3
+        with pytest.raises(AnalysisException):
+            GovernedCatalog(spark, sf_dir).execute(
+                "SELECT * FROM raw_only_view")
+    finally:
+        spark.catalog.dropTempView("raw_only_view")
+
+
 def test_listing_caps_at_boundary(cat, monkeypatch):
     """The 100-schema/50-table listing caps (RecordServiceMetadata.java:
     84-85) exercised AT the boundary with a synthetic 120-schema /

@@ -659,6 +659,21 @@ def test_set_session_properties_on_governed_path(spark, sf_dir):
     assert cat.audit_log[-1].success is False         # denial audited
 
 
+def test_set_session_reaches_sql_path(spark, sf_dir):
+    """SET/RESET SESSION limit changes what governed SQL sees, not only
+    read(): views registered before the change must not be served."""
+    from okera_trino_spark.sources.catalog import GovernedCatalog
+
+    cat = GovernedCatalog(spark, sf_dir)
+    sql = "SELECT count(*) AS n FROM (SELECT * FROM nation) t"
+    assert cat.execute(sql).collect()[0].n == 25
+    cat.execute("SET SESSION limit = 7", dialect="trino")
+    assert cat.read("nation").count() == 7
+    assert cat.execute(sql).collect()[0].n == 7
+    cat.execute("RESET SESSION limit", dialect="trino")
+    assert cat.execute(sql).collect()[0].n == 25
+
+
 # Fifth wave: set operations + grouping sets pass through natively.
 CASES5 = [
     ("intersect_except",
