@@ -1219,14 +1219,12 @@ def q_llm_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow/BLAS assignment path (similarity.KMEANS_FOLD_MAX).
     Assignment carries the embedding through the SAME projection
     (kmeans_assignments extra_cols — no corpus self-join on vec_id),
-    materialized ONCE (localCheckpoint, three consumers). CALLER
-    CONTRACT (r15): the checkpoint pins the corpus WITH its embedding
-    arrays per invocation; a long-lived session invoking this key
-    repeatedly must release finished invocations' blocks
-    (getPersistentRDDs + unpersist — bench.py's _release_persisted)
-    or the accumulation drives allocator-pressure GC stalls that
-    degrade every later multi-job query (the r14 bench median
-    collapse, bisected and fixed in r15); candidates
+    materialized ONCE (localCheckpoint, three consumers). The
+    checkpoint pins the corpus WITH its embedding arrays per
+    invocation and nothing in the product releases it: a long-lived
+    session invoking this key repeatedly accumulates those blocks
+    (perfbench reports them as ``engine.persisted_rdds``; scoping
+    them to the query is ROADMAP Open item 4). Candidates
     are an equi-join on cluster_id; a hot cell at 100 TB is AQE
     skew-join territory plus the paper's own cell-size cap. Pair
     scoring is the Arrow/BLAS pandas_udf (cosine_vec — the embed-dedup

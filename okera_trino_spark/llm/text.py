@@ -1707,14 +1707,12 @@ def q_llm_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic over ascii codes so DuckDB replays it exactly),
     collapsed immediately to per-doc bucket counts — the shuffle
     carries (doc, bucket<=64, c) — and materialized ONCE
-    (localCheckpoint; two consumers). RELEASE OWNER (the registry's
-    checkpoint-keys rule): the checkpoint pins |docs| x <=64 count
-    rows per invocation; a long-lived session invoking this key
-    repeatedly must release finished invocations' blocks
-    (getPersistentRDDs + unpersist — bench.py's _release_persisted
-    does, between samples), the q_llm_semdedup_kmeans caller contract. BOTH models come from ONE
-    combinable pass over that relation (source = sum, target = the
-    lang='en' conditional sum) collapsing to at most DSIR_BUCKETS rows
+    (localCheckpoint; two consumers). The checkpoint pins |docs| x <=64
+    count rows per invocation and nothing in the product releases it
+    (perfbench reports the blocks as ``engine.persisted_rdds``;
+    scoping them to the query is ROADMAP Open item 4). BOTH models
+    come from ONE combinable pass over that relation (source = sum,
+    target = the lang='en' conditional sum) collapsing to at most DSIR_BUCKETS rows
     regardless of corpus size — a bounded-constant driver collect
     (codebook class, r15) from which the per-bucket log-ratio table is
     rebuilt as a 64-row local relation and broadcast: scoring is one

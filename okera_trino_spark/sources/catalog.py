@@ -1024,30 +1024,14 @@ class GovernedCatalog:
         info = self._rewrite_information_schema(spark, sql, user)
         plan_sql = info if info is not None else sql
         if dialect == "trino":
-            from okera_trino_spark.functions.trino_sql import (
-                ensure_dialect_udfs, execute_match_recognize,
-                execute_trino_explain, rewrite_trino_sql)
-            ensure_dialect_udfs(spark, sql)
-            # EXPLAIN family over the governed views — plan output is
-            # policy-scoped like the query itself (VALIDATE on a hidden
-            # column fails analysis).
-            ex = execute_trino_explain(spark, plan_sql, None, params)
-            if ex is not None:
-                return ex
-            if re.search(r"\bMATCH_RECOGNIZE\b", sql, re.IGNORECASE):
-                # Lowered onto the match_recognize operator over the
-                # governed views — policies apply to the pattern scan
-                # like any other read.
-                mr = execute_match_recognize(spark, sql, params)
-                if mr is not None:
-                    return mr
-            text = rewrite_trino_sql(plan_sql)
-        elif dialect == "spark":
-            text = plan_sql
-        else:
+            # EXPLAIN and MATCH_RECOGNIZE plan over the governed views
+            # too, so plan output and pattern scans are policy-scoped.
+            from okera_trino_spark.functions.trino_sql import execute_trino
+            return execute_trino(spark, plan_sql, params=params)
+        if dialect != "spark":
             raise ValueError(f"dialect must be spark|trino, got {dialect!r}")
-        return (spark.sql(text, args=params) if params is not None
-                else spark.sql(text))
+        return (spark.sql(plan_sql, args=params) if params is not None
+                else spark.sql(plan_sql))
 
     @property
     def audit_log(self) -> list[AuditRecord]:

@@ -120,28 +120,6 @@ def main() -> None:
     ap.add_argument("--keys", default=None,
                     help="comma-separated key subset (applies to both "
                          "lists) — re-probe only what changed")
-    ap.add_argument("--drift", default=None,
-                    help="SESSION-DEGRADATION mode (r15, from the r14 "
-                         "bench median collapse): run the named "
-                         "key(s) --drift-n times in ONE session "
-                         "WITHOUT clearing persisted/checkpoint state "
-                         "between repeats — exactly the long-lived-"
-                         "session shape the bench repeat loop has — "
-                         "and flag monotone drift. A key that pins "
-                         "blocks per invocation (localCheckpoint of a "
-                         "corpus) degrades here before it degrades "
-                         "the shared bench. Any registry key accepted.")
-    ap.add_argument("--drift-n", type=int, default=6,
-                    help="repeats for --drift (default 6)")
-    ap.add_argument("--drift-sf", default=SF01,
-                    help="fixture dir for --drift (default sf0.1)")
-    ap.add_argument("--drift-canary", default=None,
-                    help="registry key timed AFTER each --drift repeat "
-                         "(state NOT cleared): detects COLLATERAL "
-                         "degradation — the r14 mode hurt OTHER "
-                         "multi-job queries more than the "
-                         "checkpoint-pinning key itself. Pick a "
-                         "multi-job key (e.g. q_llm_dsir).")
     args = ap.parse_args()
     only = None
     if args.keys:
@@ -154,62 +132,8 @@ def main() -> None:
             raise SystemExit(f"--keys not in any probe list: {unknown}; "
                              f"known: {sorted(known)}")
 
-    if args.drift and args.drift_n < 2:
-        # validated BEFORE the session spins up: late/early needs both
-        # halves, and failing AFTER minutes of timed Spark work would
-        # lose the measurement
-        raise SystemExit("--drift-n must be >= 2")
-
     specs = load_all_queries()
-
-    if args.drift:
-        # registry-membership checks need only the registry, not the
-        # JVM — fail a typo in milliseconds, not after spin-up
-        drift_names = [k.strip() for k in args.drift.split(",")
-                       if k.strip()]
-        bad = sorted(set(drift_names) - set(specs))
-        if bad:
-            raise SystemExit(f"--drift key(s) not registered: {bad}")
-        if args.drift_canary and args.drift_canary not in specs:
-            raise SystemExit(
-                f"--drift-canary key not registered: {args.drift_canary}")
-
     spark = get_spark("okera-trino-spark-scale-probe")
-
-    if args.drift:
-        rc = 0
-        canary_fn = (specs[args.drift_canary].fn
-                     if args.drift_canary else None)
-
-        def late_over_early(xs):
-            half = len(xs) // 2
-            return round((sum(xs[-half:]) / half)
-                         / max(sum(xs[:half]) / half, 1e-9), 2)
-
-        for name in drift_names:
-            fn = specs[name].fn
-            fn(spark, args.drift_sf).count()  # warm-up: JIT + footers
-            if canary_fn is not None:
-                canary_fn(spark, args.drift_sf).count()
-            samples, canary = [], []
-            for _ in range(args.drift_n):
-                samples.append(round(_timed(fn, spark, args.drift_sf), 3))
-                if canary_fn is not None:
-                    canary.append(round(
-                        _timed(canary_fn, spark, args.drift_sf), 3))
-            out = {"drift_key": name, "sf": args.drift_sf,
-                   "samples": samples,
-                   "late_over_early": late_over_early(samples)}
-            if canary:
-                out["canary_key"] = args.drift_canary
-                out["canary_samples"] = canary
-                out["canary_late_over_early"] = late_over_early(canary)
-            out["flagged"] = (out["late_over_early"] > 1.3
-                              or out.get("canary_late_over_early", 0) > 1.3)
-            rc |= int(out["flagged"])
-            print(json.dumps(out), flush=True)
-            _clear_session_state(spark)  # isolate keys from each other
-        raise SystemExit(rc)
 
     results = {}
     for name in [] if args.second_only else KEYS:
