@@ -261,6 +261,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from okera_trino_spark.session import local_frame
 from okera_trino_spark.sources.catalog import register_tables
 
 
@@ -5332,9 +5333,7 @@ def _split_filters(s: str) -> list[str]:
 
 
 def _one_text_row(spark: SparkSession, column: str, text: str) -> DataFrame:
-    from pyspark.sql import types as T
-    return spark.createDataFrame(
-        [(text,)], T.StructType([T.StructField(column, T.StringType())]))
+    return local_frame(spark, [(text,)], f"`{column}` string")
 
 
 def execute_trino_explain(spark: SparkSession, sql: str,
@@ -5441,10 +5440,7 @@ def execute_trino_explain(spark: SparkSession, sql: str,
     qe = inner._jdf.queryExecution()
     if etype == "VALIDATE":
         inner.schema  # force analysis; raises on invalid references
-        from pyspark.sql import types as T
-        return spark.createDataFrame(
-            [(True,)], T.StructType([T.StructField("Valid",
-                                                   T.BooleanType())]))
+        return local_frame(spark, [(True,)], "Valid boolean")
     if analyze:
         import time as _time
 

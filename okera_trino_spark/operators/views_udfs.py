@@ -20,6 +20,7 @@ from okera_trino_spark.functions.trino_compat import register_reference_udfs
 from okera_trino_spark.functions.trino_sql import TrinoSqlUnsupported
 from okera_trino_spark.operators._util import r4, t
 from okera_trino_spark.registry import query
+from okera_trino_spark.session import local_frame
 from okera_trino_spark.sources.catalog import GovernedCatalog, register_tables
 
 _VIEW_SQL = """
@@ -274,7 +275,7 @@ def q_trino_explain_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.append(("io_columns", ",".join(sorted(info["columns"]))))
     rows.append(("io_pushed_filter_count",
                  str(len(info["pushedFilters"]))))
-    return spark.createDataFrame(rows, "item string, value string")
+    return local_frame(spark, rows, "item string, value string")
 
 
 @query(
@@ -365,7 +366,7 @@ def q_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
          str(all(r.data_size is not None and r.data_size > 0
                  for r in col_rows)).lower()),
     ]
-    return spark.createDataFrame(rows, "item string, value string")
+    return local_frame(spark, rows, "item string, value string")
 
 
 @query(
@@ -468,7 +469,7 @@ def q_meta_security(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.append(("audit_failures_carry_errors",
                  str(all(bool(r.error) for r in log
                          if not r.success)).lower()))
-    return spark.createDataFrame(rows, "item string, value string")
+    return local_frame(spark, rows, "item string, value string")
 
 
 @query(
@@ -592,4 +593,4 @@ def q_meta_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "item string, value string")
+    return local_frame(spark, rows, "item string, value string")

@@ -18,7 +18,31 @@ from __future__ import annotations
 import os
 import socket as _socket
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_string
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                ddl: str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` that plans as a
+    ``LocalRelation``: collecting it runs no Spark job. Catalog and
+    EXPLAIN answers are control-plane lookups (the reference serves them
+    from its metadata SPI, RecordServiceMetadata.java:166-282), so they
+    must not pay for a Python-worker job the way
+    ``spark.createDataFrame(rows, ddl)``'s ``LogicalRDD`` does. The rows
+    travel as one Arrow table typed by the ``ddl`` schema, so names,
+    types and nullability are exactly the DDL's, and an empty ``rows``
+    keeps every column."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def _set_nodelay(sock) -> None:

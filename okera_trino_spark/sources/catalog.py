@@ -51,6 +51,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from okera_trino_spark.session import local_frame
+
 #: Fixture tables (TESTDATA.md). One parquet file per table.
 TABLE_NAMES = [
     "region", "nation", "customer", "supplier", "part",
@@ -620,7 +622,7 @@ class GovernedCatalog:
         if re.fullmatch(r"\s*SHOW\s+SESSION\s*", sql, re.IGNORECASE):
             rows = [(n, str(getattr(self.props, f)))
                     for n, (f, _) in sorted(self._SESSION_PROPS.items())]
-            return spark.createDataFrame(rows, "property string, value string")
+            return local_frame(spark, rows, "property string, value string")
         m = self._SET_SESSION_RE.match(sql)
         if not m:
             return None
@@ -719,8 +721,8 @@ class GovernedCatalog:
                 # Trino reports each ? marker's position; parameter
                 # types are unknown until EXECUTE binds values (Trino
                 # itself shows "unknown" for untyped markers).
-                return spark.createDataFrame(
-                    [(i, "unknown") for i in range(n_params)],
+                return local_frame(
+                    spark, [(i, "unknown") for i in range(n_params)],
                     "position int, type string")
             # OUTPUT: the planned schema WITHOUT executing — plan with
             # NULL bound to every marker (lazy; no action runs). Types
@@ -734,8 +736,8 @@ class GovernedCatalog:
                                if n_params else None)
             rows = [(f.name, spark_type_to_trino(f.dataType))
                     for f in out.schema.fields]
-            return spark.createDataFrame(
-                rows, "column_name string, type string")
+            return local_frame(
+                spark, rows, "column_name string, type string")
         m = self._EXECUTE_RE.match(sql)
         if m:
             if m.group(1).upper() == "IMMEDIATE":
@@ -786,8 +788,10 @@ class GovernedCatalog:
         (RecordServiceMetadata.java:804). Output shapes match Spark's
         own statements (``namespace`` / ``namespace, tableName`` /
         ``col_name, data_type, comment``) so existing clients parse them
-        unchanged. Returns None when ``sql`` is not a metadata
-        statement."""
+        unchanged. Every answer is a ``LocalRelation`` over rows built on
+        the driver (:func:`~okera_trino_spark.session.local_frame`), so
+        collecting it runs no Spark job. Returns None when ``sql`` is not
+        a metadata statement."""
         spark = self._session(user)
         m = self._SHOW_CATALOGS_RE.match(sql)
         if m:
@@ -797,11 +801,11 @@ class GovernedCatalog:
             cats = sorted({self.catalog_name, "okera",
                            "okera_sampled_10mb", "okera_sampled_100mb"})
             rows = [(c,) for c in self._like(m.group(1), cats)]
-            return spark.createDataFrame(rows, "catalog string")
+            return local_frame(spark, rows, "catalog string")
         m = self._SHOW_SCHEMAS_RE.match(sql)
         if m:
             rows = [(s,) for s in self._like(m.group(1), self.list_schemas())]
-            return spark.createDataFrame(rows, "namespace string")
+            return local_frame(spark, rows, "namespace string")
         m = self._SHOW_TABLES_RE.match(sql)
         if m:
             schema = m.group(1).strip('`"').lower() if m.group(1) else None
@@ -811,8 +815,8 @@ class GovernedCatalog:
                 names = [tuple(q.split(".", 1)) for q in self.list_tables()]
             keep = set(self._like(m.group(2), [t for _, t in names]))
             rows = [(s, t) for s, t in names if t in keep]
-            return spark.createDataFrame(
-                rows, "namespace string, tableName string")
+            return local_frame(
+                spark, rows, "namespace string, tableName string")
         m = re.match(r"^\s*USE\s+([\w`\"]+)\s*$", sql, re.IGNORECASE)
         if m:
             schema = m.group(1).strip('`"').lower()
@@ -829,11 +833,13 @@ class GovernedCatalog:
             # through or lowers onto) plus the session-registered
             # dialect UDFs. One name per row, sorted — the subset of
             # Trino's six-column shape every client actually reads.
-            names = sorted({f.name for f in
-                            spark.catalog.listFunctions()}
+            # SHOW FUNCTIONS runs on the driver; listFunctions() would
+            # run six Spark jobs for the same names.
+            names = sorted({r.function for r in
+                            spark.sql("SHOW FUNCTIONS").collect()}
                            | {"trino_normalize"})
             rows = [(n,) for n in self._like(m.group(1), names)]
-            return spark.createDataFrame(rows, "function string")
+            return local_frame(spark, rows, "function string")
         m = re.match(r"^\s*SHOW\s+CREATE\s+VIEW\s+([\w.`\"]+)\s*$",
                      sql, re.IGNORECASE)
         if m:
@@ -850,8 +856,9 @@ class GovernedCatalog:
             self.resolve(name)  # KeyError on unknown tables, like read()
             rows = [(f.name, f.dataType.simpleString(), None)
                     for f in self.table_schema(name, user=user).fields]
-            return spark.createDataFrame(
-                rows, "col_name string, data_type string, comment string")
+            return local_frame(
+                spark, rows,
+                "col_name string, data_type string, comment string")
         m = re.match(r"^\s*SHOW\s+STATS\s+FOR\s+([\w.`\"]+)\s*$",
                      sql, re.IGNORECASE)
         if m:
@@ -872,9 +879,10 @@ class GovernedCatalog:
                 rows.append((col, ds, nf, None))
             rows.append((None, None, None,
                          None if rc is None else float(rc)))
-            return spark.createDataFrame(
-                rows, "column_name string, data_size double, "
-                      "nulls_fraction double, row_count double")
+            return local_frame(
+                spark, rows,
+                "column_name string, data_size double, "
+                "nulls_fraction double, row_count double")
         return None
 
     # ------------------------------------------- information_schema
@@ -916,8 +924,8 @@ class GovernedCatalog:
         cat = self.catalog_name
         if "schemata" in wanted:
             rows = [(cat, s) for s in self.list_schemas()]
-            spark.createDataFrame(
-                rows, "catalog_name string, schema_name string"
+            local_frame(
+                spark, rows, "catalog_name string, schema_name string"
             ).createOrReplaceTempView("_info_schema_schemata")
         if "tables" in wanted:
             rows = [(cat, s, t, "BASE TABLE")
@@ -925,9 +933,10 @@ class GovernedCatalog:
                     for t in self.list_tables(s)]
             rows += [(cat, "default", v, "VIEW")
                      for v in self.list_views()]
-            spark.createDataFrame(
-                rows, "table_catalog string, table_schema string, "
-                      "table_name string, table_type string"
+            local_frame(
+                spark, rows,
+                "table_catalog string, table_schema string, "
+                "table_name string, table_type string"
             ).createOrReplaceTempView("_info_schema_tables")
         if "columns" in wanted:
             rows = []
@@ -938,18 +947,20 @@ class GovernedCatalog:
                               "YES" if f.nullable else "NO",
                               spark_type_to_trino(f.dataType))
                              for i, f in enumerate(fields)]
-            spark.createDataFrame(
-                rows, "table_catalog string, table_schema string, "
-                      "table_name string, column_name string, "
-                      "ordinal_position int, column_default string, "
-                      "is_nullable string, data_type string"
+            local_frame(
+                spark, rows,
+                "table_catalog string, table_schema string, "
+                "table_name string, column_name string, "
+                "ordinal_position int, column_default string, "
+                "is_nullable string, data_type string"
             ).createOrReplaceTempView("_info_schema_columns")
         if "views" in wanted:
             rows = [(cat, "default", v, self._views[v])
                     for v in self.list_views()]
-            spark.createDataFrame(
-                rows, "table_catalog string, table_schema string, "
-                      "table_name string, view_definition string"
+            local_frame(
+                spark, rows,
+                "table_catalog string, table_schema string, "
+                "table_name string, view_definition string"
             ).createOrReplaceTempView("_info_schema_views")
         return "".join(
             p if i % 2 else self._INFO_SCHEMA_RE.sub(

@@ -856,3 +856,82 @@ def test_show_functions(cat):
     liked = cat.execute("SHOW FUNCTIONS LIKE 'regexp%'",
                         dialect="trino").collect()
     assert liked and all(r.function.startswith("regexp") for r in liked)
+
+
+# ------------------------------------- catalog answers as local relations
+# Each catalog-answered statement with the result schema it has always
+# had (the DDL its answer is built from), in the order a client might
+# send them. DESCRIBE INPUT/OUTPUT need the prepared statement "pq".
+_CATALOG_ANSWERS = [
+    ("SHOW CATALOGS", "catalog string"),
+    ("SHOW SCHEMAS", "namespace string"),
+    ("SHOW TABLES", "namespace string, tableName string"),
+    ("SHOW TABLES LIKE '%ion'", "namespace string, tableName string"),
+    ("SHOW FUNCTIONS LIKE 'abs%'", "function string"),
+    ("SHOW SESSION", "property string, value string"),
+    ("SHOW STATS FOR orders", "column_name string, data_size double, "
+                              "nulls_fraction double, row_count double"),
+    ("DESCRIBE orders", "col_name string, data_type string, comment string"),
+    ("DESCRIBE INPUT pq", "position int, type string"),
+    ("DESCRIBE OUTPUT pq", "column_name string, type string"),
+    ("EXPLAIN (TYPE VALIDATE) SELECT o_orderkey FROM orders",
+     "Valid boolean"),
+]
+
+
+@pytest.fixture()
+def prepared_cat(cat):
+    cat.execute("PREPARE pq FROM SELECT o_orderkey FROM orders "
+                "WHERE o_orderkey = ?")
+    return cat
+
+
+def test_catalog_answers_run_no_spark_job(prepared_cat, spark):
+    """Catalog statements are control-plane lookups (the reference
+    answers them from its metadata SPI, RecordServiceMetadata.java:
+    166-282): answering and collecting one must not start a Spark job.
+    Each statement runs under its own job group; the listener bus is
+    drained before the group's jobs are read. A table's first load in a
+    session infers its parquet schema with a job, so one query loads
+    every table before the statements are measured."""
+    sc = spark.sparkContext
+    listener_bus = sc._jsc.sc().listenerBus()
+    prepared_cat.execute("SELECT count(*) FROM region").collect()
+    try:
+        for i, (sql, _) in enumerate(_CATALOG_ANSWERS):
+            group = f"catalog-answer-{i}"
+            sc.setJobGroup(group, sql)
+            rows = prepared_cat.execute(sql, dialect="trino").collect()
+            listener_bus.waitUntilEmpty()
+            assert rows, sql
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], sql
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_catalog_answers_keep_their_schemas(prepared_cat):
+    """Names, types and nullability of every catalog answer are the DDL
+    it is built from — including answers with no rows and columns that
+    hold only NULLs."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    ddl = dict(_CATALOG_ANSWERS)
+    for sql, want in _CATALOG_ANSWERS:
+        df = prepared_cat.execute(sql, dialect="trino")
+        assert df.schema == _parse_datatype_string(want), sql
+    empty = prepared_cat.execute("SHOW TABLES LIKE 'no_such%'")
+    assert empty.collect() == []
+    assert empty.schema == _parse_datatype_string(ddl["SHOW TABLES"])
+    # A row-filtered principal gets NULL counts: nulls_fraction and
+    # row_count hold only NULLs and stay double.
+    prepared_cat.set_policy("filtered", "orders",
+                            TablePolicy(row_filter="o_orderkey < 10"))
+    stats = prepared_cat.execute("SHOW STATS FOR orders", user="filtered")
+    assert all(r.nulls_fraction is None and r.row_count is None
+               for r in stats.collect())
+    assert stats.schema == _parse_datatype_string(
+        ddl["SHOW STATS FOR orders"])
+    desc = prepared_cat.execute("DESCRIBE region")
+    assert all(r.comment is None for r in desc.collect())
+    assert desc.schema == _parse_datatype_string(ddl["DESCRIBE orders"])
